@@ -31,6 +31,13 @@ object Sessions {
     .config("javax.jdo.option.ConnectionURL",
       s"jdbc:derby:;databaseName=${sys.props("java.io.tmpdir")}/graft-metastore;create=true")
     .config("spark.ui.enabled", "false")
+    // the status stores keep finished SQL executions, jobs and stages on
+    // the heap even with the UI off (default 1000 each), and nothing in
+    // the engine reads them: a long-lived serving session would hold the
+    // plans of its last thousand requests
+    .config("spark.sql.ui.retainedExecutions", "20")
+    .config("spark.ui.retainedJobs", "20")
+    .config("spark.ui.retainedStages", "20")
 
   /** Standard local session: `local[cpus]`, shuffle.partitions = cpus.
     * Built with [[graft.functions.GraftExtensions]] so the session

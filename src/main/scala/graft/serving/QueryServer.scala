@@ -11,11 +11,11 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.OptionalFilters
-import graft.warehouse.Ingest
+import graft.warehouse.{Ingest, Schemas}
 import graft.warehouse.Ingest.Warehouse
 
 /** The reference's process-level serving edge (`app/api/v2/routes.py`,
@@ -25,8 +25,9 @@ import graft.warehouse.Ingest.Warehouse
   *
   * Every endpoint delegates to an operator that already has a green
   * CORRECTNESS row; this class adds ONLY the HTTP surface: parameter
-  * parsing, FastAPI-equivalent validation (400 on malformed dates or
-  * inverted ranges, `routes.py` date checks at `ingestion.py:23-31`),
+  * parsing, FastAPI-equivalent validation (400 on malformed dates,
+  * malformed numbers or inverted ranges, `routes.py` date checks at
+  * `ingestion.py:23-31`),
   * bounded-edge JSON rendering, and the 202-accepted background-ingest
   * thread boundary (`ingestion.py:34-50`: handler enqueues and returns
   * immediately; a single worker drains jobs in order, exactly FastAPI's
@@ -41,6 +42,11 @@ import graft.warehouse.Ingest.Warehouse
   * (OptionalFilters builds only-defined predicates, so Catalyst sees
   * sargable conjuncts and prunes partitions), and only the ≤5000
   * requested rows cross to the edge.
+  *
+  * Every warehouse read here goes through the table's declared schema
+  * ([[graft.warehouse.Schemas]] is the read contract): a request plans
+  * its scan from the declaration and never starts a footer-inference
+  * job of its own, and a column an older file lacks reads as null.
   *
   * One deliberate addition over the reference: `GET /v2/ingest/jobs/N`
   * exposes the background job's terminal state. The reference's 202
@@ -101,6 +107,12 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
   private case class Request(method: String, params: Map[String, Seq[String]],
                              path: String) {
     def first(k: String): Option[String] = params.get(k).flatMap(_.headOption)
+    /** Typed numeric params (FastAPI's typed `Query` parity): absent →
+      * None, unparseable → 400, never a NumberFormatException 500. */
+    def int(k: String): Option[Int] = typed(k, _.toIntOption, "an integer")
+    def double(k: String): Option[Double] = typed(k, _.toDoubleOption, "a number")
+    private def typed[A](k: String, parse: String => Option[A], kind: String): Option[A] =
+      first(k).map(v => parse(v).getOrElse(throw new BadRequest(s"$k must be $kind")))
   }
   /** `chunks` set → chunked transfer encoding: the body streams from
     * the iterator (one Spark partition in flight via toLocalIterator),
@@ -123,6 +135,8 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
             .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
           f(Request(x.getRequestMethod, params, x.getRequestURI.getPath))
         } catch {
+          case e: BadRequest =>
+            Response(400, jsonObj("detail" -> jsonStr(e.getMessage)))
           case NonFatal(e) =>
             Response(500, jsonObj("detail" -> jsonStr(
               Option(e.getMessage).getOrElse(e.getClass.getSimpleName))))
@@ -161,14 +175,15 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     * (`routes.py:57`); when false (the default) the payload column is
     * never even selected, so the parquet scan stays narrow. */
   private def data(r: Request): Response = {
-    val limit = r.first("limit").map(_.toInt).getOrElse(graft.sources.Exports.DefaultPageRows)
+    val limit = r.int("limit").getOrElse(graft.sources.Exports.DefaultPageRows)
     if (limit > 5000 || limit < 0)
       return Response(400, jsonObj("detail" -> jsonStr("limit must be in [0, 5000]")))
-    val offset = math.max(0, r.first("offset").map(_.toInt).getOrElse(0))
+    val offset = math.max(0, r.int("offset").getOrElse(0))
+    val (minValue, maxValue) = (r.double("min_value"), r.double("max_value"))
     val includeRaw = r.first("include_raw").exists(_.equalsIgnoreCase("true"))
 
-    val obs = spark.read.parquet(wh.observations)
-    val meta = spark.read.parquet(wh.metaSeries)
+    val obs = Schemas.read(spark, wh.observations, Schemas.dataObservations)
+    val meta = Schemas.read(spark, wh.metaSeries, Schemas.metaSeries)
     // only-defined conjuncts: absent params contribute NO predicate, so
     // the scan keeps its pushdown (the F1 operator, OptionalFilters)
     val filtered = OptionalFilters(obs,
@@ -178,21 +193,17 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
         r.first("start").map(lit(_).cast("timestamp"))),
       OptionalFilters.leOpt(col("observation_time"),
         r.first("end").map(lit(_).cast("timestamp"))),
-      OptionalFilters.geOpt(col("value"), r.first("min_value").map(_.toDouble)),
-      OptionalFilters.leOpt(col("value"), r.first("max_value").map(_.toDouble)))
+      OptionalFilters.geOpt(col("value"), minValue),
+      OptionalFilters.leOpt(col("value"), maxValue))
     // raw_payload is selected ONLY when asked for — column pruning keeps
     // the default page's scan off the (wide) payload column entirely
-    val rawCol =
-      if (includeRaw && obs.columns.contains("raw_payload")) col("raw_payload")
-      else lit(null).cast("string")
+    val rawCol = if (includeRaw) col("raw_payload") else lit(null).cast("string")
     // unit/frequency ride from meta_series (schemas.py:13-17) — but
     // SeriesResponse declares them REQUIRED str (pydantic would raise,
-    // never serialize None), so a warehouse written before they were
-    // registered falls back to the autoregister defaults
-    // (series_autoregister.py: "UNKNOWN" / "intraday") instead of null
-    def metaOpt(c: String, default: String) =
-      if (meta.columns.contains(c)) coalesce(col(c), lit(default))
-      else lit(default)
+    // never serialize None), so a null unit/frequency — also what a
+    // warehouse written before they were registered reads as — falls
+    // back to the autoregister defaults (series_autoregister.py:
+    // "UNKNOWN" / "intraday")
     val joined = filtered
       .join(broadcast(OptionalFilters(meta,
         OptionalFilters.eqOpt(col("dataset_id"), r.first("dataset_id")))),
@@ -201,8 +212,8 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
       .select(col("series_id"), col("dataset_id"), col("description"),
         col("observation_time"), col("value"), col("quality_flag"),
         rawCol.as("raw_payload"),
-        metaOpt("unit", "UNKNOWN").as("unit"),
-        metaOpt("frequency", "intraday").as("frequency"))
+        coalesce(col("unit"), lit("UNKNOWN")).as("unit"),
+        coalesce(col("frequency"), lit("intraday")).as("frequency"))
     // the reference pages the FLAT rows (LIMIT/OFFSET in DATA_QUERY),
     // then groups the page in the handler — same here, and the page is
     // what bounds the edge collect
@@ -240,7 +251,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
 
   /** `discovery.py:9-15`. */
   private def datasets(r: Request): Response = {
-    val ds = spark.read.parquet(wh.rawEvents)
+    val ds = Schemas.read(spark, wh.rawEvents, Schemas.rawEvents)
       .select("dataset_id").distinct().orderBy("dataset_id")
       .collect().map(r0 => jsonStr(r0.getString(0)))
     Response(200, ds.mkString("[", ",", "]"))
@@ -252,7 +263,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
       case None =>
         Response(400, jsonObj("detail" -> jsonStr("dataset_id is required")))
       case Some(ds) =>
-        val rows = spark.read.parquet(wh.fieldCatalog)
+        val rows = Schemas.read(spark, wh.fieldCatalog, Schemas.fieldCatalog)
           .filter(col("dataset_id") === ds)
           .orderBy("field_name")
           .select(col("field_name").as("field"),
@@ -264,14 +275,14 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
 
   /** `discovery.py:43-57`: newest raw payloads, cap 50. */
   private def sample(r: Request): Response = {
-    val limit = math.min(r.first("limit").map(_.toInt).getOrElse(5), 50)
+    val limit = math.min(r.int("limit").getOrElse(5), 50)
     r.first("dataset_id") match {
       case None =>
         Response(400, jsonObj("detail" -> jsonStr("dataset_id is required")))
       case Some(ds) =>
         // newest-first needs a total order for a stable page: tie-break
         // the (second-grain) ingest stamp by event_id
-        val rows = spark.read.parquet(wh.rawEvents)
+        val rows = Schemas.read(spark, wh.rawEvents, Schemas.rawEvents)
           .filter(col("dataset_id") === ds)
           .orderBy(col("ingested_at").desc, col("event_id").desc)
           .limit(limit)
@@ -452,21 +463,12 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     * The predicate is a plan-side filter (get_json_object + try_cast),
     * so only matching payloads reach the bounded edge collect. */
   private def rawPreview(r: Request): Response = {
-    val limit = r.first("limit").map(_.toInt).getOrElse(20)
+    val limit = r.int("limit").getOrElse(20)
     if (limit < 1 || limit > 500)
       return Response(400, jsonObj("detail" -> jsonStr("limit must be in [1, 500]")))
     // ALL parameter validation precedes any table access (a malformed
     // site_id must 400 even against an empty warehouse)
-    val siteId = r.first("site_id") match {
-      case Some(sid) =>
-        sid.toIntOption match {
-          case None => // typed Query param parity: 4xx, not a 500
-            return Response(400,
-              jsonObj("detail" -> jsonStr("site_id must be an integer")))
-          case ok => ok
-        }
-      case None => None
-    }
+    val siteId = r.int("site_id")
     r.first("dataset_id") match {
       case None =>
         Response(400, jsonObj("detail" -> jsonStr("dataset_id is required")))
@@ -474,7 +476,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
         // nothing landed yet → the empty page, like empty tables
         if (!graft.warehouse.Upsert.tableExists(spark, wh.rawEvents))
           return Response(200, "[]")
-        val base = spark.read.parquet(wh.rawEvents)
+        val base = Schemas.read(spark, wh.rawEvents, Schemas.rawEvents)
           .filter(col("dataset_id") === ds)
         val filtered = siteId match {
           case Some(v) =>
@@ -508,9 +510,9 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     * export — the reference's StreamingResponse contract. */
   private def exportCsv(r: Request): Response = {
     val limit = math.min(
-      r.first("limit").map(_.toInt).getOrElse(graft.sources.Exports.DefaultPageRows),
+      r.int("limit").getOrElse(graft.sources.Exports.DefaultPageRows),
       graft.sources.Exports.MaxExportRows)
-    val obs = spark.read.parquet(wh.observations)
+    val obs = Schemas.read(spark, wh.observations, Schemas.dataObservations)
     val filtered = OptionalFilters(obs,
       OptionalFilters.eqOpt(col("series_id"), r.first("series_id")))
       .orderBy("series_id", "observation_time")
@@ -531,7 +533,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     * [1, 50000], payloads ordered ingested_at DESC (event_id tie-break
     * for a stable page — the second-grain stamp alone isn't an order). */
   private def rawPage(r: Request): Either[Response, Array[String]] = {
-    val limit = r.first("limit").map(_.toInt).getOrElse(graft.sources.Exports.DefaultPageRows)
+    val limit = r.int("limit").getOrElse(graft.sources.Exports.DefaultPageRows)
     if (limit < 1 || limit > 50000)
       return Left(Response(400,
         jsonObj("detail" -> jsonStr("limit must be in [1, 50000]"))))
@@ -539,7 +541,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
       case None =>
         Left(Response(400, jsonObj("detail" -> jsonStr("dataset_id is required"))))
       case Some(ds) =>
-        Right(spark.read.parquet(wh.rawEvents)
+        Right(Schemas.read(spark, wh.rawEvents, Schemas.rawEvents)
           .filter(col("dataset_id") === ds)
           .orderBy(col("ingested_at").desc, col("event_id").desc)
           .limit(limit)
@@ -616,7 +618,7 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
     * source required, country/variable/date-range optional, page
     * capped at the reference's le=5000, newest first. */
   private def gieData(r: Request): Response = {
-    val limit = r.first("limit").map(_.toInt).getOrElse(100)
+    val limit = r.int("limit").getOrElse(100)
     if (limit > 5000 || limit < 0)
       return Response(400, jsonObj("detail" -> jsonStr("limit must be in [0, 5000]")))
     r.first("source") match {
@@ -654,3 +656,6 @@ final class QueryServer(spark: SparkSession, wh: Warehouse,
   private def jsonObj(fields: (String, String)*): String =
     fields.map { case (k, v) => s"${jsonStr(k)}:$v" }.mkString("{", ",", "}")
 }
+
+/** A malformed request: the handler answers 400 with this detail. */
+private final class BadRequest(detail: String) extends RuntimeException(detail)

@@ -232,7 +232,7 @@ object Gie {
         .as("series_id"),
       assetIdOf(col("country")).as("asset_id"),
       col("value"))
-    val delKeys = s.read.parquet(seriesPath(wh))
+    val delKeys = Schemas.read(s, seriesPath(wh), Schemas.gieSeries)
       .filter(col("source") === source).select("series_id")
     Upsert.deleteRefresh(s, dailyPath(wh), delKeys, Seq("series_id"), daily)
   }
@@ -247,9 +247,9 @@ object Gie {
                 country: Option[String], variable: Option[String],
                 startDate: Option[String], endDate: Option[String],
                 limit: Int): DataFrame = {
-    val d = s.read.parquet(dailyPath(wh))
-    val sr = s.read.parquet(seriesPath(wh))
-    val a = s.read.parquet(assetsPath(wh))
+    val d = Schemas.read(s, dailyPath(wh), Schemas.daily)
+    val sr = Schemas.read(s, seriesPath(wh), Schemas.gieSeries)
+    val a = Schemas.read(s, assetsPath(wh), Schemas.assets)
     val joined = d
       .join(broadcast(sr.select("series_id", "variable", "source")), Seq("series_id"))
       .join(broadcast(a.select("asset_id", "asset_name")), Seq("asset_id"))

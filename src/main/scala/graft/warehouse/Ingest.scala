@@ -79,7 +79,8 @@ object Ingest {
         .select(col("series_id"), lit(dataset).as("dataset_id"),
           col("metric").as("description"), lit("UNKNOWN").as("unit"),
           lit("intraday").as("frequency"), lit(true).as("is_active"))
-      Upsert.insertIfAbsent(spark, wh.metaSeries, series, Seq("series_id"))
+      Upsert.insertIfAbsent(spark, wh.metaSeries,
+        Schemas.conform(series, Schemas.metaSeries), Seq("series_id"))
 
       // (4)+(5) normalize to observations and upsert on the composite PK
       val obs = Normalize.toObservations(unpivoted, dataset, timeCol, keyCols)
@@ -107,7 +108,7 @@ object Ingest {
   /** Serving read: the reference client's `get_history` (SURVEY §3.3). */
   def getHistory(spark: SparkSession, wh: Warehouse, seriesId: String,
                  start: String, end: String): DataFrame =
-    spark.read.parquet(wh.observations)
+    Schemas.read(spark, wh.observations, Schemas.dataObservations)
       .filter(col("series_id") === seriesId &&
         col("observation_time").between(lit(start).cast("timestamp"), lit(end).cast("timestamp")))
       .orderBy("observation_time")
@@ -128,7 +129,8 @@ object Ingest {
         .select("dataset_id", "raw_payload"))
     val merged =
       if (Upsert.tableExists(spark, wh.fieldCatalog))
-        FieldDiscovery.merge(spark.read.parquet(wh.fieldCatalog), increment)
+        FieldDiscovery.merge(
+          Schemas.read(spark, wh.fieldCatalog, Schemas.fieldCatalog), increment)
       else increment
     writeSwap(spark, wh.fieldCatalog, merged)
   }

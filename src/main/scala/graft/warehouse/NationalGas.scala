@@ -261,7 +261,8 @@ object NationalGas {
         .select(col("series_id"), lit(dataset).as("dataset_id"),
           col("description"), lit("UNKNOWN").as("unit"),
           lit(frequency).as("frequency"), lit(true).as("is_active"))
-      Upsert.insertIfAbsent(s, wh.metaSeries, series, Seq("series_id"))
+      Upsert.insertIfAbsent(s, wh.metaSeries,
+        Schemas.conform(series, Schemas.metaSeries), Seq("series_id"))
 
       // (4)+(5) normalize + upsert: blank → skip, unparseable → skip
       // (transformer.py:80-86), lenient time parse, raw payload per row

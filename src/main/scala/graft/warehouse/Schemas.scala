@@ -1,5 +1,7 @@
 package graft.warehouse
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
 /** Explicit schemas for the reference's warehouse tables (SURVEY §1.1),
@@ -9,8 +11,28 @@ import org.apache.spark.sql.types._
   * JSONB payloads are carried as raw JSON strings (`get_json_object` /
   * `from_json` on demand); at 100 TB the payload column is only decoded
   * in projections that ask for it, so the scan stays narrow.
+  *
+  * These declarations are the READ CONTRACT of the serving path: every
+  * serving read goes through [[read]] with its table's schema, so Spark
+  * plans the scan from the declaration instead of running a one-task
+  * footer-inference job per request. A column a file lacks (a table
+  * written before the column existed) reads as null. Writers that build
+  * a table's rows by hand go through [[conform]], and IngestSpec
+  * checks that every ingest path writes exactly these shapes.
   */
 object Schemas {
+
+  /** Read the parquet table at `path` through its declared schema. */
+  def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
+
+  /** Project `df` onto `schema`: declared order and types, and a typed
+    * null for every declared column `df` does not carry. */
+  def conform(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.toIndexedSeq.map { f =>
+      (if (df.columns.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name)
+    }: _*)
 
   /** Series catalog — `meta_series` (`models.py:24-39`). */
   val metaSeries: StructType = StructType(Seq(
@@ -68,9 +90,12 @@ object Schemas {
     StructField("unit", StringType),
     StructField("series_unique_concat", StringType, nullable = false)))
 
-  /** GIE daily fact — `energy.daily` (`db_queries.sql:175-181`). */
+  /** GIE daily fact — `energy.daily` (`db_queries.sql:175-181`), plus
+    * the series' `asset_id` carried on the fact so the star read joins
+    * the asset dimension without going through `meta.series`. */
   val daily: StructType = StructType(Seq(
     StructField("value_date", DateType, nullable = false),
     StructField("series_id", LongType, nullable = false),
+    StructField("asset_id", LongType, nullable = false),
     StructField("value", DoubleType)))
 }

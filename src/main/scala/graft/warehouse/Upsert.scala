@@ -69,7 +69,10 @@ object Upsert {
 
   /** Insert-if-absent (ON CONFLICT DO NOTHING): append only rows whose
     * key is not already present. Set-oriented — one anti-join instead of
-    * the reference's per-row SELECT-then-INSERT (`series_builder.py:5-61`). */
+    * the reference's per-row SELECT-then-INSERT (`series_builder.py:5-61`).
+    * When no key is new nothing is written: an empty append would still
+    * leave a schema-only parquet file, and every reader of the table would
+    * list and open one more file per no-op ingest. */
   def insertIfAbsent(spark: SparkSession, path: String, incoming: DataFrame,
                      keys: Seq[String]): Unit = {
     val deduped = incoming.dropDuplicates(keys)
@@ -77,8 +80,8 @@ object Upsert {
       deduped.write.mode(SaveMode.Overwrite).parquet(path)
     } else {
       val existing = spark.read.parquet(path).select(keys.map(col): _*)
-      deduped.join(broadcast(existing), keys, "left_anti")
-        .write.mode(SaveMode.Append).parquet(path)
+      val fresh = deduped.join(broadcast(existing), keys, "left_anti")
+      if (!fresh.isEmpty) fresh.write.mode(SaveMode.Append).parquet(path)
     }
   }
 

@@ -81,6 +81,53 @@ class IngestSpec extends SparkSpec {
     assert(after.filter(col("dataset_id") === "GAS_QUALITY").count() === before)
   }
 
+  test("re-ingesting an identical batch appends no meta_series file") {
+    // insert-if-absent with no new key must not append: an empty append
+    // still leaves a schema-only parquet file that every /v2/data lists
+    val wh = Ingest.Warehouse(Files.createTempDirectory("graft-noop").toString)
+    def metaFiles = new java.io.File(wh.metaSeries).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    Ingest.ingestWide(spark, wh, wideBatch, "GAS_QUALITY", "ts", Seq("site"))
+    val before = metaFiles
+    Ingest.ingestWide(spark, wh, wideBatch, "GAS_QUALITY", "ts", Seq("site"))
+    Ingest.ingestWide(spark, wh, wideBatch, "GAS_QUALITY", "ts", Seq("site"))
+    assert(metaFiles === before, "a no-op ingest appended to meta_series")
+    assert(spark.read.parquet(wh.metaSeries).count() === 4)
+    // a batch with one new key still lands it
+    Ingest.ingestWide(spark, wh, Seq(("2024-01-02 06:00:00", "Bacton", 50.3))
+      .toDF("ts", "site", "ch4"), "GAS_QUALITY", "ts", Seq("site"))
+    assert(spark.read.parquet(wh.metaSeries).count() === 5)
+  }
+
+  test("every ingest path writes exactly the declared Schemas shapes") {
+    // the serving path reads each table through its declared schema, so a
+    // writer that drifts from it would serve nulls (a column it does not
+    // declare is invisible, one it declares but never writes reads null):
+    // compare every file's footer, merged, by field name and type
+    import graft.warehouse.{Gie, NationalGas, Schemas}
+    val wh = Ingest.Warehouse(Files.createTempDirectory("graft-shapes").toString)
+    Ingest.ingestWide(spark, wh, wideBatch, "GAS_QUALITY", "ts", Seq("site"))
+    NationalGas.ingestEntsog(spark, wh, "2024-05-01", "2024-05-03",
+      indicators = Seq("Physical Flow"))
+    Gie.ingest(spark, wh, Gie.DatasetAgsi, Gie.SourceAgsi, None)
+    def shape(t: org.apache.spark.sql.types.StructType) =
+      t.fields.map(f => f.name -> f.dataType.simpleString).toMap
+    val drift = Seq(
+      wh.rawEvents -> Schemas.rawEvents,
+      wh.fieldCatalog -> Schemas.fieldCatalog,
+      wh.metaSeries -> Schemas.metaSeries,
+      wh.observations -> Schemas.dataObservations,
+      Gie.assetsPath(wh) -> Schemas.assets,
+      Gie.seriesPath(wh) -> Schemas.gieSeries,
+      Gie.dailyPath(wh) -> Schemas.daily).flatMap { case (path, declared) =>
+        val written = shape(spark.read.option("mergeSchema", "true").parquet(path).schema)
+        val want = shape(declared)
+        (written.toSet diff want.toSet).map(f => s"$path writes undeclared $f") ++
+          (want.toSet diff written.toSet).map(f => s"$path never writes declared $f")
+      }
+    assert(drift.isEmpty, drift.mkString("\n"))
+  }
+
   test("readJson + flattenStruct + explodePath reproduce the nested unnest") {
     // shape of the instantaneous-flow response: 2 levels of nesting
     val raw = Seq(

@@ -634,4 +634,93 @@ class QueryServerSpec extends SparkSpec {
       assert(b2 === golden("golden_v2_data.json"))
     }
   }
+
+  /** Each malformed numeric param of `route` answers 400 naming the
+    * param. The warehouse is empty, so the parse must come before any
+    * table access. */
+  private def assertMalformed400(route: String, required: String, params: String*): Unit =
+    withServer { (srv, _) =>
+      for (p <- params) {
+        val (st, body) = http("GET", s"${srv.url}$route?$required&$p=1x")
+        assert(st === 400, s"$route $p: $body")
+        assert(body.contains(s"$p must be"), s"$route $p: $body")
+      }
+    }
+
+  test("malformed numbers 400 on /v2/data: limit, offset, min_value, max_value") {
+    assertMalformed400("/v2/data", "", "limit", "offset", "min_value", "max_value")
+  }
+
+  test("malformed limit 400 on /v2/discovery/sample") {
+    assertMalformed400("/v2/discovery/sample", "dataset_id=GQ", "limit")
+  }
+
+  test("malformed limit and site_id 400 on /v2/discovery/raw") {
+    assertMalformed400("/v2/discovery/raw", "dataset_id=GQ", "limit", "site_id")
+  }
+
+  test("malformed limit 400 on /v2/export/data.csv") {
+    assertMalformed400("/v2/export/data.csv", "", "limit")
+  }
+
+  test("malformed limit 400 on /v2/export/raw/json") {
+    assertMalformed400("/v2/export/raw/json", "dataset_id=GQ", "limit")
+  }
+
+  test("malformed limit 400 on /v2/export/raw/csv") {
+    assertMalformed400("/v2/export/raw/csv", "dataset_id=GQ", "limit")
+  }
+
+  test("malformed limit 400 on /v2/gie/data") {
+    assertMalformed400("/v2/gie/data", "source=GIE_AGSI", "limit")
+  }
+
+  test("serving reads plan from the declared schemas: no parquet schema-inference job") {
+    // a read without a schema makes Spark run a one-task job (callsite
+    // `parquet at <caller>`) to read a footer before planning; the
+    // declared schemas make that job unnecessary on every request
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    withServer { (srv, wh) =>
+      val (st, body) = http("POST",
+        s"${srv.url}/v2/ingest/gas?from_date=2024-01-01&to_date=2024-01-02")
+      assert(st === 202)
+      val jobId = "\"job_id\":(\\d+)".r.findFirstMatchIn(body).get.group(1)
+      assert(await {
+        http("GET", s"${srv.url}/v2/ingest/jobs/$jobId")._2.contains("done")
+      })
+      // (description, stage names) per job, in bus order; a job with a
+      // fence description brackets the window, so events still queued
+      // from the ingest and late events of the reads are both placed
+      val jobs = new ConcurrentLinkedQueue[(String, Seq[String])]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          jobs.add((Option(e.properties).map(_.getProperty("spark.job.description"))
+            .orNull, e.stageInfos.map(_.name)))
+      }
+      def fence(tag: String): Unit = {
+        spark.sparkContext.setJobDescription(tag)
+        try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+        assert(await(jobs.asScala.exists(_._1 == tag)), s"fence $tag never arrived")
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        fence("reads-begin")
+        val sid = "NG_GAS_QUALITY_STFERGUS_WOBBE"
+        for (path <- Seq("/v2/data?limit=1000", s"/v2/data?series_id=$sid&include_raw=true",
+                         "/v2/discovery/fields?dataset_id=GAS_QUALITY",
+                         "/v2/discovery/raw?dataset_id=GAS_QUALITY",
+                         s"/v2/export/data.csv?series_id=$sid&limit=2"))
+          assert(http("GET", s"${srv.url}$path")._1 === 200, path)
+        fence("reads-end")
+      } finally spark.sparkContext.removeSparkListener(listener)
+      val seen = jobs.asScala.toSeq
+      val window = seen.slice(seen.indexWhere(_._1 == "reads-begin") + 1,
+        seen.indexWhere(_._1 == "reads-end"))
+      assert(window.nonEmpty, "the reads ran no job at all")
+      val inference = window.flatMap(_._2).filter(_.startsWith("parquet at "))
+      assert(inference.isEmpty, s"schema-inference jobs: $inference")
+    }
+  }
 }

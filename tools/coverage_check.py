@@ -2,7 +2,8 @@
 """Coverage-drift check: the three hand-maintained views of the query
 surface — README.md's family table, SURVEY.md §8's full inventory, and
 SparkEntry.queries (read from bench_detail.json, which Bench emits from
-that map) — must agree exactly.
+that map) — must agree exactly, and README's "N ScalaTest specs" claims
+must equal the specs registered under src/test.
 
 Usage: coverage_check.py [BENCH_DETAIL.json] [--update]
 
@@ -11,10 +12,13 @@ Checks (exit 1 on any drift):
      prefix wins across the backticked patterns in the first cell), no
      row is empty, and each row's claimed count matches;
   2. SURVEY.md §8's generated inventory block (between the
-     COVERAGE-INVENTORY markers) is set-equal to the live query list.
+     COVERAGE-INVENTORY markers) is set-equal to the live query list;
+  3. every "N ScalaTest specs" in README.md states the number of
+     `test("...")` registrations in src/test (counted statically, so a
+     spec must be registered by its own `test(` line, not in a loop).
 
 --update regenerates the SURVEY inventory block and rewrites README
-family counts in place; it still FAILS if a query matches no README
+family and spec counts in place; it still FAILS if a query matches no README
 family row — a brand-new family needs its documentation row written by
 hand, which is exactly the drift this tool exists to catch.
 bench_round.py runs the check (no --update) with every snapshot.
@@ -27,6 +31,19 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BEGIN = "<!-- COVERAGE-INVENTORY-BEGIN (generated: tools/coverage_check.py --update) -->"
 END = "<!-- COVERAGE-INVENTORY-END -->"
+SPEC_REGISTRATION = re.compile(r'^\s*test\("', re.M)
+SPEC_CLAIM = re.compile(r"(\d+) ScalaTest specs")
+
+
+def count_specs():
+    """Number of `test("...")` registrations under src/test."""
+    n = 0
+    for dirpath, _, files in os.walk(os.path.join(REPO, "src", "test")):
+        for f in files:
+            if f.endswith(".scala"):
+                with open(os.path.join(dirpath, f)) as fh:
+                    n += len(SPEC_REGISTRATION.findall(fh.read()))
+    return n
 
 
 def parse_readme_rows(readme):
@@ -117,6 +134,20 @@ def main() -> int:
             else:
                 bad.append(f"README.md line {idx + 1}: claims {claimed} "
                            f"queries, live map has {actual}")
+    specs = count_specs()
+    claims = [(i, int(m.group(1))) for i, ln in enumerate(lines)
+              for m in SPEC_CLAIM.finditer(ln)]
+    if not claims:
+        bad.append("README.md: no \"N ScalaTest specs\" claim found")
+    for i, claimed in claims:
+        if claimed == specs:
+            continue
+        if update:
+            lines[i] = SPEC_CLAIM.sub(f"{specs} ScalaTest specs", lines[i])
+            print(f"README.md line {i + 1}: specs {claimed} -> {specs}")
+        else:
+            bad.append(f"README.md line {i + 1}: claims {claimed} ScalaTest "
+                       f"specs, src/test registers {specs}")
     if update and lines != readme.splitlines():
         open(readme_path, "w").write("\n".join(lines) + "\n")
 
@@ -146,7 +177,7 @@ def main() -> int:
         print(f"DRIFT {b}")
     if not bad:
         print(f"coverage: clean — {len(queries)} queries consistent across "
-              "SparkEntry/README/SURVEY")
+              f"SparkEntry/README/SURVEY, {specs} specs as README states")
     return 1 if bad else 0
 
 
